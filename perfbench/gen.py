@@ -10,18 +10,16 @@ code under test.
   with lat/lon in fields 9/10; every 997th row is malformed), with the
   expected clean rows, distinct counts, reject counts and an
   order-insensitive digest.
-- ``stream_main``: the open-loop file generator for ``ingest_stream``, run as
-  its own process.
+- ``write_stream_files``: the source files of ``ingest_stream``, staged
+  before the program starts.
 - ``write_tables``: the star-schema parquet tables the query workload reads.
 """
 
 from __future__ import annotations
 
-import argparse
 import calendar
 import json
 import os
-import sys
 import time
 
 import numpy as np
@@ -159,59 +157,28 @@ def write_pings_csv(path: str, seed: int, n_rows: int, n_vehicles: int) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Open-loop stream generator (its own process)
+# Stream source files
 # ---------------------------------------------------------------------------
 
 STREAM_VID_STRIDE = 10**6  # vehicle id // stride - 1 == file sequence number
 
 
-def stream_main(argv: list[str]) -> int:
-    """Drop one CSV file into ``--dir`` every ``--interval`` seconds for
-    ``--seconds``, on a fixed schedule that does not slow when the program
-    does. Each file is written under a hidden name, renamed into place, and
-    its creation stamp (wall clock at rename) and schedule lag appended to
-    ``--manifest``. Vehicle ids in file ``s`` are ``(s + 1) * stride + k``.
-    """
-    p = argparse.ArgumentParser()
-    p.add_argument("--dir", required=True)
-    p.add_argument("--manifest", required=True)
-    p.add_argument("--seed", type=int, required=True)
-    p.add_argument("--seconds", type=float, required=True)
-    p.add_argument("--interval", type=float, required=True)
-    p.add_argument("--rows", type=int, required=True)
-    p.add_argument("--vehicles", type=int, required=True)
-    args = p.parse_args(argv)
-    n_files = max(1, int(round(args.seconds / args.interval)))
-    # Pre-generate every file's lines so the schedule only pays for writes.
+def write_stream_files(
+    stage_dir: str, seed: int, n_files: int, rows: int, vehicles: int
+) -> list[dict]:
+    """Write ``n_files`` CSV files into ``stage_dir``; return, per file, its
+    sequence number, name and truth. Vehicle ids in file ``s`` are
+    ``(s + 1) * stride + k``, so every delivered row names its file."""
     files = []
     for s in range(n_files):
         lines, truth, _ = pings_rows(
-            args.seed * 100_003 + s,
-            args.rows,
-            args.vehicles,
-            vid_base=(s + 1) * STREAM_VID_STRIDE,
+            seed * 100_003 + s, rows, vehicles, vid_base=(s + 1) * STREAM_VID_STRIDE
         )
-        files.append(("\n".join(lines) + "\n", truth))
-    start = time.time() + 0.05
-    with open(args.manifest, "w") as man:
-        for s, (text, truth) in enumerate(files):
-            due = start + s * args.interval
-            delay = due - time.time()
-            if delay > 0:
-                time.sleep(delay)
-            tmp = os.path.join(args.dir, f".part-{s:05d}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(text)
-            stamp = time.time()
-            os.rename(tmp, os.path.join(args.dir, f"part-{s:05d}.csv"))
-            man.write(
-                json.dumps(
-                    {"seq": s, "created": stamp, "due": due, "truth": truth}
-                )
-                + "\n"
-            )
-            man.flush()
-    return 0
+        name = f"part-{s:05d}.csv"
+        with open(os.path.join(stage_dir, name), "w") as fh:
+            fh.write("\n".join(lines) + "\n")
+        files.append({"seq": s, "name": name, "truth": truth})
+    return files
 
 
 # ---------------------------------------------------------------------------
@@ -398,7 +365,3 @@ def _documents(rng, n):
             "n_chars": pa.array([len(t) for t in texts], pa.int64()),
         }
     )
-
-
-if __name__ == "__main__":
-    sys.exit(stream_main(sys.argv[1:]))

@@ -45,15 +45,6 @@ def _write_json(path: str, obj) -> None:
     os.rename(tmp, path)
 
 
-def _wait_file(path: str, deadline: float) -> dict | None:
-    while _now() < deadline:
-        if os.path.exists(path):
-            with open(path) as fh:
-                return json.load(fh)
-        time.sleep(0.02)
-    return None
-
-
 # ---------------------------------------------------------------------------
 # Instrumentation (traced runs only)
 # ---------------------------------------------------------------------------
@@ -216,7 +207,7 @@ def _io_pings_layer(spark, csv: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# ingest_stream: stream_pings -> write_stream_http, open-loop file source
+# ingest_stream: stream_pings -> write_stream_http, fed one file at a time
 # ---------------------------------------------------------------------------
 
 
@@ -229,20 +220,23 @@ def run_ingest_stream() -> dict:
         def __init__(self) -> None:
             self.events: list[dict] = []
             self.rows = 0
+            self.changed = threading.Condition()
 
         def onQueryStarted(self, event) -> None:
             pass
 
         def onQueryProgress(self, event) -> None:
             p = event.progress
-            self.events.append(
-                {
-                    "batch": p.batchId,
-                    "rows": p.numInputRows,
-                    "durations": dict(p.durationMs),
-                }
-            )
-            self.rows += p.numInputRows
+            with self.changed:
+                self.events.append(
+                    {
+                        "batch": p.batchId,
+                        "rows": p.numInputRows,
+                        "durations": dict(p.durationMs),
+                    }
+                )
+                self.rows += p.numInputRows
+                self.changed.notify_all()
 
         def onQueryIdle(self, event) -> None:
             pass
@@ -260,20 +254,40 @@ def run_ingest_stream() -> dict:
         SPEC["checkpoint"],
         metrics="approx",
     )
-    # stream start: the first (cold) micro-batch has taken the warm-up file
-    while listener.rows < SPEC["warm_rows_in"]:
-        if _now() > SPEC["deadline"] or not query.isActive:
-            raise TimeoutError("stream did not start")
-        time.sleep(0.02)
-    _write_json(SPEC["ready_file"], {"t_ready": _now()})
-    done = _wait_file(SPEC["gen_done_file"], SPEC["deadline"])
-    total_rows = done["rows_in"] if done else None
-    drain_deadline = _now() + SPEC["drain_s"]
-    while total_rows is not None and listener.rows < total_rows and _now() < drain_deadline:
-        time.sleep(0.02)
+    placed: list[dict] = []
+    expected = 0
+
+    def feed(seq: int, f: dict) -> bool:
+        """Rename one staged file into the source directory and wait until
+        the listener reports the micro-batch that read it."""
+        nonlocal expected
+        expected += f["rows_in"]
+        created = _now()
+        os.rename(
+            os.path.join(SPEC["stage_dir"], f["name"]),
+            os.path.join(SPEC["src_dir"], f["name"]),
+        )
+        with listener.changed:
+            ok = listener.changed.wait_for(
+                lambda: listener.rows >= expected, timeout=SPEC["file_timeout_s"]
+            )
+        placed.append({"seq": seq, "created": created, "done": _now()})
+        return ok
+
+    files = SPEC["files"]
+    warm = SPEC["warm_files"]
+    # stream start: the first (cold) micro-batches warm the stream up
+    ok = all(feed(s, files[s]) for s in range(warm))
+    t_ready = _now()
+    s = warm
+    while ok and s < len(files) and (s == warm or _now() < t_ready + SPEC["seconds"]):
+        ok = feed(s, files[s])
+        s += 1
     query.stop()
     return {
-        "drained": total_rows is not None and listener.rows >= total_rows,
+        "t_ready": t_ready,
+        "stalled": not ok,
+        "placed": placed,
         "progress": listener.events,
         "records": state.records,
         "approx_vehicles": state.approx_vehicles,
@@ -368,7 +382,11 @@ def run_query() -> dict:
     def build(name: str):
         return specs[name].fn(spark, sf_dir)
 
-    # warm-up pass: collect every result for the oracle check in run.py
+    # Set-up warms up with two untimed passes. The first collects every
+    # result for the oracle check in run.py. The second makes the noop
+    # writes the timed passes make, since the first noop writes after a
+    # collect still run slower, and checks their plans with the full-plan
+    # guard.
     results = {}
     for name in checked:
         try:
@@ -377,15 +395,24 @@ def run_query() -> dict:
             fail(name, "collect", e)
     with open(SPEC["results_file"], "wb") as fh:
         pickle.dump(results, fh)
+    guard = {}
+    for name in checked:
+        try:
+            df = build(name)
+            before = set(_execution_ids(spark))
+            _noop(df)
+            new = sorted(set(_execution_ids(spark)) - before)
+            guard[name] = _guard(spark, df, new, lambda n=name: build(n))
+        except Exception as e:
+            fail(name, "guard", e)
     t_ready = _now()
-    guard, passes = {}, []
+    passes = []
     p = 0
     while p < SPEC["min_passes"] or _now() < t_ready + SPEC["seconds"]:
         group = f"pass:{p}" if traced_turn(p) else None
         times, layers = {}, {}
         for name in names:
             qgroup = f"{group}:{name}" if group else None
-            before = set(_execution_ids(spark)) if p == 0 else None
             with operation(spark, qgroup):
                 try:
                     calls0, g0, gs0 = PROBE.py4j_calls, PROBE.graph_calls, PROBE.graph_s
@@ -413,22 +440,8 @@ def run_query() -> dict:
                     "graph_calls": PROBE.graph_calls - g0,
                     "graph_s": PROBE.graph_s - gs0,
                 }
-            if before is not None:  # full-plan guard on the first timed write
-                new = sorted(set(_execution_ids(spark)) - before)
-                guard[name] = _guard(spark, df, new, lambda n=name: build(n))
         passes.append({"group": group, "times": times, "layers": layers})
         p += 1
-    for name in checked:  # untimed queries: one guarded noop write each
-        if name in names:
-            continue
-        try:
-            df = build(name)
-            before = set(_execution_ids(spark))
-            _noop(df)
-            new = sorted(set(_execution_ids(spark)) - before)
-            guard[name] = _guard(spark, df, new, lambda n=name: build(n))
-        except Exception as e:
-            fail(name, "guard", e)
     counts = {}
     if SPEC["trace"]:
         for name in names:
