@@ -43,7 +43,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("-f", "--file", required=True, help="input CSV (.csv/.gz/.zip) or directory")
     p.add_argument("-u", "--url", default=DEFAULT_URL, help=f"sink URL (default {DEFAULT_URL})")
     p.add_argument("--kinesis", metavar="STREAM", help="send to a Kinesis stream instead of HTTP")
-    p.add_argument("--stream", action="store_true", help="incremental (Structured Streaming) mode over a directory")
+    p.add_argument("--stream", action="store_true", help="incremental (Structured Streaming) mode over a directory of plain/.gz CSVs; .zip is batch-only")
     p.add_argument("--checkpoint", help="checkpoint dir for --stream")
     p.add_argument("--dry-run", action="store_true", help="parse + metrics only, no send")
     p.add_argument("--batch-size", type=int, default=10_001, help="rows per envelope (reference: 10,001)")
@@ -406,7 +406,11 @@ def main(argv: list[str] | None = None) -> int:
         print(f"file not found: {args.file}", file=sys.stderr)
         return 1
 
-    from csv_loader_spark.io.pings import distinct_vehicle_counts, read_pings
+    from csv_loader_spark.io.pings import (
+        distinct_vehicle_counts,
+        progress_line,
+        read_pings,
+    )
     from csv_loader_spark.session import get_spark
 
     spark = get_spark("csv_loader_cli")
@@ -435,12 +439,11 @@ def main(argv: list[str] | None = None) -> int:
 
     pings = read_pings(spark, args.file)
     if args.dry_run:
-        row = distinct_vehicle_counts(pings).collect()[0]
+        pass  # parse + metrics only
     elif args.kinesis:
         from csv_loader_spark.sinks.kinesis import write_kinesis
 
         write_kinesis(pings, args.kinesis)
-        row = distinct_vehicle_counts(pings).collect()[0]
     else:
         from csv_loader_spark.sinks.http import write_http
 
@@ -452,12 +455,8 @@ def main(argv: list[str] | None = None) -> int:
             retry_interval=args.retry_interval,
             max_retries=args.max_retries,
         )
-        row = distinct_vehicle_counts(pings).collect()[0]
-    # reference progress-line format (CsvLoader.java:165)
-    print(
-        "%.2fM records loaded, %d unique vehicles (%d unique ids)"
-        % (row["n_records"] / 1e6, row["n_vehicles"], row["n_ids"])
-    )
+    row = distinct_vehicle_counts(pings).collect()[0]
+    print(progress_line(row["n_records"], row["n_vehicles"], row["n_ids"]))
     return 0
 
 

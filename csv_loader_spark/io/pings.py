@@ -33,12 +33,13 @@ Documented divergences from the reference (SURVEY §7.4):
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
 import zipfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -64,15 +65,30 @@ PING_SCHEMA = T.StructType(
     ]
 )
 
+# Reader options shared by the batch and streaming sources: full RFC 4180
+# like the reference's commons-csv. Quoted fields may embed newlines, so
+# every file is one task (records can span split boundaries).
+CSV_OPTIONS = dict(
+    header=False,
+    mode="PERMISSIVE",
+    encoding="UTF-8",
+    multiLine=True,
+    escape='"',  # RFC 4180 doubled-quote escaping ("" inside a quoted
+    # field), like commons-csv; Spark's default escape is backslash
+)
 
-def _extract_first_zip_entry(path: str, workdir: str | None = None) -> str:
+
+def _extract_first_zip_entry(path: str) -> str:
     """Materialize ONLY the first entry of a .zip (CsvLoader.java:84-88 reads
     `zf.entries().nextElement()` once — later entries are ignored by design).
 
     Driver-side: zip has no splittable codec in Hadoop anyway, so a 1-file
-    staging copy costs the same one pass the reference pays.
+    staging copy costs the same one pass the reference pays. The lazy
+    DataFrame reads the copy whenever it runs, so the staging directory
+    lives until the interpreter exits.
     """
-    out_dir = workdir or tempfile.mkdtemp(prefix="csv_loader_zip_")
+    out_dir = tempfile.mkdtemp(prefix="csv_loader_zip_")
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
     with zipfile.ZipFile(path) as zf:
         names = zf.namelist()  # central-directory order == Java's entries()
         if not names:
@@ -84,35 +100,32 @@ def _extract_first_zip_entry(path: str, workdir: str | None = None) -> str:
     return out_path
 
 
-def read_pings_raw(
-    spark: SparkSession, path: str, *, multiline: bool = True
-) -> DataFrame:
+def read_pings_raw(spark: SparkSession, path: str) -> DataFrame:
     """Suffix-dispatch source (ops 2-5): plain / .gz / .zip-first-entry → raw
     11-column string DataFrame (absent trailing fields are NULL).
 
     Spark decompresses .gz by extension natively; .zip is staged driver-side.
     Suffix match is case-insensitive like the reference (:84,:90).
-
-    ``multiline=True`` (default) is full RFC 4180: quoted fields may embed
-    newlines, exactly like the reference's commons-csv — but it makes every
-    file a single task (records can span split boundaries). At 100 TB, if
-    the producer guarantees no embedded newlines (GPS pings never have
-    them), pass ``multiline=False`` for splittable parallel scans — the
-    one semantics-vs-scale switch in this source.
     """
-    lower = path.lower()
-    if lower.endswith(".zip"):
+    if path.lower().endswith(".zip"):
         path = _extract_first_zip_entry(path)
-    return spark.read.csv(
-        path,
-        schema=RAW_SCHEMA,
-        header=False,
-        mode="PERMISSIVE",
-        encoding="UTF-8",
-        multiLine=multiline,
-        escape='"',  # RFC 4180 doubled-quote escaping ("" inside a quoted
-        # field), like commons-csv; Spark's default escape is backslash
-    )
+    return spark.read.csv(path, schema=RAW_SCHEMA, **CSV_OPTIONS)
+
+
+def _parsed_columns() -> dict[str, Column]:
+    """Ops 6-10 per field, over the raw ``_cN`` columns: positional layout,
+    double cast, multi-format time parse, id truncation. Each parse yields
+    NULL where the reference catches an exception (CsvLoader.java:131-143)."""
+    # Per-record variant switch (CsvLoader.java:124-127): any evidence of a
+    # >9-field record routes lat/lon to cols 9/10.
+    wide = F.col("_c9").isNotNull() | F.col("_c10").isNotNull()
+    return {
+        "vehicle_id_str": F.col("_c1"),
+        "vehicle_id": decimal_str_to_int64(F.col("_c1")),
+        "ts_millis": parse_time_to_millis(F.col("_c0")),
+        "lat": F.when(wide, F.col("_c9")).otherwise(F.col("_c2")).try_cast("double"),
+        "lon": F.when(wide, F.col("_c10")).otherwise(F.col("_c3")).try_cast("double"),
+    }
 
 
 def project_pings(raw: DataFrame) -> DataFrame:
@@ -123,19 +136,7 @@ def project_pings(raw: DataFrame) -> DataFrame:
     filter is the reference's catch-and-continue (CsvLoader.java:131-143)
     expressed as predicate pushdown fodder.
     """
-    # Per-record variant switch (CsvLoader.java:124-127): any evidence of a
-    # >9-field record routes lat/lon to cols 9/10.
-    wide = F.col("_c9").isNotNull() | F.col("_c10").isNotNull()
-    lat_str = F.when(wide, F.col("_c9")).otherwise(F.col("_c2"))
-    lon_str = F.when(wide, F.col("_c10")).otherwise(F.col("_c3"))
-
-    projected = raw.select(
-        F.col("_c1").alias("vehicle_id_str"),
-        decimal_str_to_int64(F.col("_c1")).alias("vehicle_id"),
-        parse_time_to_millis(F.col("_c0")).alias("ts_millis"),
-        lat_str.try_cast("double").alias("lat"),
-        lon_str.try_cast("double").alias("lon"),
-    )
+    projected = raw.select(*(c.alias(n) for n, c in _parsed_columns().items()))
     return projected.filter(
         F.col("lat").isNotNull()
         & F.col("lon").isNotNull()
@@ -148,18 +149,15 @@ def rejected_pings(raw: DataFrame) -> DataFrame:
     """The rows `project_pings` drops, with a reason column — the reference
     prints these and continues (CsvLoader.java:133,141); we keep them
     queryable (a strict superset of the reference's stdout log)."""
-    wide = F.col("_c9").isNotNull() | F.col("_c10").isNotNull()
-    lat = F.when(wide, F.col("_c9")).otherwise(F.col("_c2")).try_cast("double")
-    lon = F.when(wide, F.col("_c10")).otherwise(F.col("_c3")).try_cast("double")
-    ts = parse_time_to_millis(F.col("_c0"))
-    vid = decimal_str_to_int64(F.col("_c1"))
+    c = _parsed_columns()
+    bad_latlon = c["lat"].isNull() | c["lon"].isNull()
     reason = (
-        F.when(lat.isNull() | lon.isNull(), F.lit("bad_latlon"))
-        .when(ts.isNull(), F.lit("bad_time"))
+        F.when(bad_latlon, F.lit("bad_latlon"))
+        .when(c["ts_millis"].isNull(), F.lit("bad_time"))
         .otherwise(F.lit("bad_vehicle_id"))
     )
     return raw.filter(
-        lat.isNull() | lon.isNull() | ts.isNull() | vid.isNull()
+        bad_latlon | c["ts_millis"].isNull() | c["vehicle_id"].isNull()
     ).withColumn("reject_reason", reason)
 
 
@@ -194,4 +192,12 @@ def distinct_vehicle_counts(pings: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_records"),
         F.countDistinct("vehicle_id_str").alias("n_vehicles"),
         F.countDistinct("vehicle_id").alias("n_ids"),
+    )
+
+
+def progress_line(records: int, vehicles: int, ids: int) -> str:
+    """Op 17: the reference's progress line (CsvLoader.java:165)."""
+    return (
+        f"{records / 1e6:.2f}M records loaded, "
+        f"{vehicles} unique vehicles ({ids} unique ids)"
     )

@@ -20,15 +20,12 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: edge-count ceiling under which an iterative op narrows its working
-#: frames (env-tunable). 4M edges ~ 64 MB of (long, long) rows — the
-#: point where per-stage scheduling overhead dominates per-task work.
-_SMALL_GRAPH_EDGE_MAX_ENV = "SPARK_GRAFT_SMALL_GRAPH_EDGES"
+#: frames. 4M edges ~ 64 MB of (long, long) rows — the point where
+#: per-stage scheduling overhead dominates per-task work.
 _SMALL_GRAPH_EDGE_MAX = 4_000_000
 
 
@@ -46,15 +43,13 @@ def small_graph_coalesce(e: DataFrame, n_rows: int | None = None) -> DataFrame:
     narrowing is SIZE-GATED the same way triangle_nodes gates its
     broadcast: count once (the action materializes the checkpoint every
     round reuses — effectively free for an executing caller), coalesce
-    only under ``$SPARK_GRAFT_SMALL_GRAPH_EDGES`` (default 4M) edges.
+    only under ``_SMALL_GRAPH_EDGE_MAX`` (4M) edges.
     ``coalesce`` on the materialized checkpoint is a narrow read-time
     merge — no recompute, values untouched.
     """
     if n_rows is None:
         n_rows = e.count()
-    if n_rows > int(
-        os.environ.get(_SMALL_GRAPH_EDGE_MAX_ENV, str(_SMALL_GRAPH_EDGE_MAX))
-    ):
+    if n_rows > _SMALL_GRAPH_EDGE_MAX:
         return e
     cpus = e.sparkSession.sparkContext.defaultParallelism
     return e.coalesce(max(2, cpus // 8))
@@ -243,9 +238,9 @@ def pagerank_fixed_point(
     # — repartitioning again here would re-shuffle the identical layout
     # (same key, and the partition-count default matches: both sides
     # plan at spark.sql.shuffle.partitions), so the flag skips it and
-    # the edge prep keeps exactly ONE src exchange end to end (q160:
-    # plans/r16/q160_edge_build_*). Callers whose edge frame is NOT
-    # src-partitioned must leave it False.
+    # the edge prep keeps exactly ONE src exchange end to end (q160, by
+    # plan reading; no plan dump is committed). Callers whose edge frame
+    # is NOT src-partitioned must leave it False.
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not pre_partitioned:
         e = e.repartition("src")

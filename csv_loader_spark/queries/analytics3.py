@@ -236,9 +236,10 @@ def q212_hits_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup's clustering) and (b) leaving the checkpointed frame
     # CU-partitioned, which the per-round hub aggregate (groupBy("cu")
     # after the broadcast su-join) and the seed-hub distinct reuse
-    # exchange-free (plans/r16/q212_*). At cluster scale, rounds where
-    # the score frames exceed the broadcast threshold still re-exchange
-    # by su for the authority leg — same trade as pagerank's rank join.
+    # exchange-free (by plan reading; no dump committed). At cluster
+    # scale, rounds where the score frames exceed the broadcast threshold
+    # still re-exchange by su for the authority leg — same trade as
+    # pagerank's rank join.
     pairs = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .select(F.col("o_custkey").alias("cu"), F.col("l_suppkey").alias("su"))

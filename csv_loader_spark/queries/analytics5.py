@@ -501,7 +501,7 @@ def q232_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ops/graph.symmetrized_dedup_edges) — near-unique trade pairs made
     the old pre-explode distinct a second full exchange that deduped
     almost nothing; edge multiset proven identical, 2 shuffles -> 1
-    (plans/r15/q232_edge_build_before/after.txt)."""
+    (plans/r15/q232_edge_build_*.txt)."""
     from csv_loader_spark.ops.graph import symmetrized_dedup_edges
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -949,7 +949,7 @@ def q237_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade pairs are near-unique (dup ratio ~1.1), so the old pre-explode
     distinct paid a second full exchange to dedup almost nothing; edge
     multiset proven identical, 2 shuffles -> 1 in the edge build
-    (plans/r15/q237_edge_build_before/after.txt). The prescribed connected-
+    (plans/r15/q237_edge_build_*.txt). The prescribed connected-
     components PRE-PASS was measured and REJECTED: min-label
     propagation over the full edge list is itself a multi-source BFS
     (same per-round full-edge scans), so the pre-pass cost 13-19 s at

@@ -1604,11 +1604,9 @@ _PROBE_TAU_NUM, _PROBE_TAU_DEN = 3, 10  # "true near-dup" = exact Jaccard >= 0.3
 # n_shingles(doc) × max_df candidates per rejected doc; intersection
 # counts can only shrink, so under flood the meter UNDER-reports
 # precision (a conservative audit) and at gate scale the guard is inert
-# (sf0.01 max corpus df = 5 over 500 docs). Env-tunable and read at
-# import so the Spark plan and the oracle SQL bake the SAME value.
-_PROBE_VERIFY_MAX_DF = int(
-    os.environ.get("SPARK_GRAFT_PROBE_VERIFY_MAX_DF", "512")
-)
+# (sf0.01 max corpus df = 5 over 500 docs). One constant, so the Spark
+# plan and the oracle SQL bake the SAME value.
+_PROBE_VERIFY_MAX_DF = 512
 
 
 @query(

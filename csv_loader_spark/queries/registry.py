@@ -20,6 +20,7 @@ Determinism rules applied throughout the library:
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -44,6 +45,12 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     """Decorator registering a query implementation with its oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
+        params = list(inspect.signature(fn).parameters)
+        if params != ["spark", "sf_dir"]:
+            raise TypeError(
+                f"query {name}: {fn.__qualname__}({', '.join(params)}) must "
+                "take exactly (spark, sf_dir)"
+            )
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
         _REGISTRY[name] = QuerySpec(name, fn, oracle, tuple(tags), fn.__doc__ or "")

@@ -255,7 +255,7 @@ def q160_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetrized_dedup_edges explodes the raw pairs, shuffles ONCE by
     # src, and dedups exchange-free above it; pre_partitioned=True tells
     # pagerank_fixed_point to checkpoint that layout as-is. Edge prep:
-    # 2 shuffle exchanges -> 1 (plans/r16/q160_edge_build_*). Contrast
+    # 2 shuffle exchanges -> 1 (by plan reading; no dump committed). Contrast
     # q213, where the bigram pairs dedup 592x and the fold would shuffle
     # 2x the raw stream — measured and kept on the distinct-first shape.
     edges = symmetrized_dedup_edges(pairs, "cu", "su")
@@ -431,7 +431,7 @@ def _triangle_oracle() -> str:
 #: overhead (unsafe row header + hash table load factor).
 _TRI_BYTES_PER_EDGE = 32
 #: Broadcast the closing edge list only when its estimated size is under
-#: this many bytes (env-tunable; default 256 MiB of row payload — the
+#: this many bytes (256 MiB of row payload — the
 #: estimate is PRE-hash-relation, so the built broadcast relation is
 #: roughly double that — far above Spark's 10 MB
 #: autoBroadcastJoinThreshold because this hint is load-bearing: a shuffled
@@ -439,7 +439,7 @@ _TRI_BYTES_PER_EDGE = 32
 #: sf0.1 — but bounded so a 100 TB-scale co-order edge list of O(100M+)
 #: rows never hard-ODEs the executors; above it the join shuffles and the
 #: m^1.5 wedge bound still holds).
-_TRI_BROADCAST_MAX_ENV = "SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES"
+_TRI_BROADCAST_MAX_BYTES = 256 << 20
 
 
 def triangle_nodes(
@@ -463,17 +463,13 @@ def triangle_nodes(
     SIZE-GATED: the edge frame is counted once (materializing the same
     checkpoint every downstream branch reuses, so the action is free) and
     the hint applies only while ``m * 32 B`` fits under
-    ``broadcast_max_bytes`` (default ``$SPARK_GRAFT_TRI_BROADCAST_MAX_BYTES``
-    or 256 MiB row payload, ~0.5 GiB built relation); larger graphs fall
+    ``broadcast_max_bytes`` (default ``_TRI_BROADCAST_MAX_BYTES``,
+    256 MiB row payload, ~0.5 GiB built relation); larger graphs fall
     back to the shuffled join. Explain-only callers can pass ``n_edges``
     to skip the gating count's materialization job.
     """
-    import os
-
     if broadcast_max_bytes is None:
-        broadcast_max_bytes = int(
-            os.environ.get(_TRI_BROADCAST_MAX_ENV, str(256 << 20))
-        )
+        broadcast_max_bytes = _TRI_BROADCAST_MAX_BYTES
     e = edges.localCheckpoint(eager=False)
     if n_edges is None:
         # one action: materializes the checkpoint (deg / wedges / closing

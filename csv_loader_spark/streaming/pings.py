@@ -21,8 +21,10 @@ A ``max`` of per-batch counts would instead report the largest
 single-batch cardinality and arbitrarily underestimate once batches carry
 disjoint vehicles. ``metrics="exact"`` is the documented reference-parity
 OPT-IN (it collect()s id pairs per batch and grows unbounded driver sets,
-exactly like the reference's HashSets); ``metrics=None`` skips metrics
-entirely.
+exactly like the reference's HashSets).
+
+``stream_pings`` reads plain and ``.gz`` files; ``.zip`` is batch-only
+(``read_pings_raw`` stages its first entry on the driver).
 """
 
 from __future__ import annotations
@@ -34,8 +36,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from csv_loader_spark.io.pings import RAW_SCHEMA, project_pings
-from csv_loader_spark.sinks.http import BATCH_SIZE, RETRY_INTERVAL_S, post_partition
+from csv_loader_spark.io.pings import (
+    CSV_OPTIONS,
+    RAW_SCHEMA,
+    progress_line,
+    project_pings,
+)
+from csv_loader_spark.sinks.http import BATCH_SIZE, RETRY_INTERVAL_S, write_http
 
 
 def stream_pings(
@@ -43,13 +50,10 @@ def stream_pings(
 ) -> DataFrame:
     """Incremental CSV source over a directory (new files = new data), same
     parse chain as batch ``read_pings`` — one code path, two execution modes."""
-    reader = spark.readStream.schema(RAW_SCHEMA).option("encoding", "UTF-8")
+    reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.csv(
-        src_dir, header=False, mode="PERMISSIVE", multiLine=True, escape='"'
-    )
-    return project_pings(raw)
+    return project_pings(reader.csv(src_dir, schema=RAW_SCHEMA, **CSV_OPTIONS))
 
 
 @dataclass
@@ -74,13 +78,10 @@ class IngestMetrics:
 
     def line(self, exact: bool) -> str:
         if exact:
-            nv, ni = len(self.vehicles_str), len(self.vehicle_ids)
-        else:
-            nv, ni = self.approx_vehicles, self.approx_ids
-        return (
-            f"{self.records / 1e6:.2f}M records loaded, "
-            f"{nv} unique vehicles ({ni} unique ids)"
-        )
+            return progress_line(
+                self.records, len(self.vehicles_str), len(self.vehicle_ids)
+            )
+        return progress_line(self.records, self.approx_vehicles, self.approx_ids)
 
 
 def update_batch_metrics(
@@ -103,7 +104,7 @@ def update_batch_metrics(
             state.vehicles_str.update(r[0] for r in ids)
             state.vehicle_ids.update(r[1] for r in ids)
         print(state.line(exact=True), file=sys.stderr)
-    elif metrics == "approx":
+    else:
         if not replayed:
             # One mergeable HLL sketch per counter per batch (executor
             # side, partial-agg combined), unioned into the running
@@ -154,32 +155,31 @@ def write_stream_http(
     batch_size: int = BATCH_SIZE,
     retry_interval: float = RETRY_INTERVAL_S,
     max_retries: int | None = None,
-    metrics: str | None = "approx",
+    metrics: str = "approx",
     available_now: bool = False,
 ) -> tuple[StreamingQuery, IngestMetrics]:
-    """foreachBatch → per-partition envelope POSTs (executor-side).
+    """foreachBatch → the batch ``write_http`` sink, then the progress
+    metrics (``metrics`` is ``"approx"`` or ``"exact"``).
 
     ``available_now=True`` drains everything currently in the source then
     stops — the batch-equivalent trigger used by tests and backfills.
     """
+    if metrics not in ("approx", "exact"):
+        raise ValueError(f"metrics must be 'approx' or 'exact', not {metrics!r}")
     state = IngestMetrics()
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        def _send(rows):
-            post_partition(
-                rows,
+        batch_df.persist()
+        try:
+            write_http(
+                batch_df,
                 url,
                 source_id,
                 batch_size=batch_size,
                 retry_interval=retry_interval,
                 max_retries=max_retries,
             )
-
-        batch_df.persist()
-        try:
-            batch_df.foreachPartition(_send)
-            if metrics in ("exact", "approx"):
-                update_batch_metrics(state, batch_df, batch_id, metrics)
+            update_batch_metrics(state, batch_df, batch_id, metrics)
         finally:
             batch_df.unpersist()
 

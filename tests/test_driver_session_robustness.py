@@ -1,8 +1,10 @@
 """The driver hands queries ITS SparkSession, whose timezone we don't
 control; every query must pin UTC semantics itself (tune_session)."""
 
+import pytest
+
 from csv_loader_spark.io.tables import load_table
-from csv_loader_spark.queries.registry import all_specs
+from csv_loader_spark.queries.registry import all_specs, query
 
 
 def test_q58_correct_under_non_utc_session(spark):
@@ -48,3 +50,15 @@ def test_load_table_cache_hit_repins_timezone(spark):
         assert after == baseline
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_registry_rejects_non_driver_signature():
+    """The driver calls every query as fn(spark, sf_dir); a decorator on a
+    helper with any other signature must fail at import, not at run time."""
+    with pytest.raises(TypeError, match=r"\(spark, sf_dir\)"):
+
+        @query("q_bad_signature")
+        def helper(hourly):
+            return hourly
+
+    assert "q_bad_signature" not in all_specs()

@@ -1,5 +1,9 @@
 """End-to-end batch ingestion tests (FIXTURES.md §A1-A5; CsvLoader.java:72-194)."""
 
+import os
+import subprocess
+import sys
+
 from conftest import (
     NARROW_ROWS,
     WIDE_ROWS,
@@ -17,6 +21,8 @@ from csv_loader_spark.io.pings import (
     read_pings_raw,
     rejected_pings,
 )
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _by_id(df):
@@ -71,21 +77,58 @@ def test_zip_source_first_entry_only(spark, tmp_path):
     assert _by_id(df) == _expected(NARROW_ROWS)
 
 
+def test_zip_staging_removed_at_exit(tmp_path):
+    """The driver-side copy of a .zip's first entry outlives the lazy
+    DataFrame that reads it, and is gone once the interpreter exits."""
+    path = str(tmp_path / "narrow.zip")
+    write_zip_csv(path)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    code = (
+        "import os, sys\n"
+        "from csv_loader_spark.io.pings import _extract_first_zip_entry\n"
+        "staged = _extract_first_zip_entry(sys.argv[1])\n"
+        "assert os.path.getsize(staged) > 0\n"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code, path],
+        check=True,
+        cwd=REPO,
+        env={**os.environ, "TMPDIR": str(tmp)},
+    )
+    assert os.listdir(tmp) == []
+
+
 def test_rfc4180_dialect_details(spark, tmp_path):
-    """CRLF records, quoted numeric fields, doubled-quote escaping, and the
-    documented BOM divergence (we keep the row; reference drops it)."""
+    """CRLF records, quoted numeric fields, doubled-quote escaping, a quoted
+    field embedding a comma and a newline, ragged short and over-wide rows,
+    empty fields, and the documented BOM divergence (we keep the row;
+    reference drops it). The LF-ended row stays last: the multiLine reader
+    takes the file's line separator from its first record (CRLF here)."""
     p = tmp_path / "rfc.csv"
     with open(p, "wb") as f:
         f.write("﻿".encode())  # BOM — stripped by Spark (divergence doc'd)
         f.write(b"2015-06-01 08:30:15+00,1,40.0,-74.0\r\n")  # CRLF
         f.write(b'"2015-06-01 08:30:16+00","2","41.5","-75.5"\r\n')  # quoted fields
+        f.write(b'2015-06-01 08:30:18+00,3,40.0,-74.0,"a,b\nc"\r\n')  # , and \n
+        f.write(b"2015-06-01 08:30:19+00,4\r\n")  # short row
+        f.write(b"2015-06-01 08:30:20+00,,40.0,-74.0\r\n")  # empty id field
+        # 14 fields: wide layout (lat/lon in cols 9/10), extras dropped
+        f.write(b"2015-06-01 08:30:21+00,5,0,0,4,5,6,7,8,42.5,-76.5,x,y,z\r\n")
         f.write(b'2015-06-01 08:30:17+00,"say ""hi""",40.0,-74.0\n')  # "" escape
     df = read_pings(spark, str(p))
     got = _by_id(df)
-    assert set(got) == {1, 2}  # the embedded-quote id row is non-numeric → drop
+    assert set(got) == {1, 2, 3, 5}  # the "" id, short, empty-id rows drop
     assert got[2] == (1433147416000, 41.5, -75.5)
-    raw = read_pings_raw(spark, str(p)).collect()
-    assert raw[2]["_c1"] == 'say "hi"'  # RFC 4180 unescaping, like commons-csv
+    assert got[5] == (1433147421000, 42.5, -76.5)
+    raw = {r["_c0"]: r for r in read_pings_raw(spark, str(p)).collect()}
+    assert len(raw) == 7
+    assert raw["2015-06-01 08:30:17+00"]["_c1"] == 'say "hi"'  # like commons-csv
+    assert raw["2015-06-01 08:30:18+00"]["_c4"] == "a,b\nc"
+    assert raw["2015-06-01 08:30:19+00"][2:] == (None,) * 9  # ragged → NULL
+    assert raw["2015-06-01 08:30:20+00"]["_c1"] is None  # empty field → NULL
+    wide = raw["2015-06-01 08:30:21+00"]
+    assert len(wide) == 11 and wide["_c10"] == "-76.5"  # extra fields dropped
 
 
 def test_directory_of_csvs(spark, tmp_path):

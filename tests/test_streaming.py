@@ -100,6 +100,19 @@ def test_stream_exact_metrics_is_reference_parity_opt_in(
     assert len(metrics.vehicle_ids) == len(NARROW_ROWS)
 
 
+@pytest.mark.parametrize("mode", ["Exact", None])
+def test_unknown_metrics_mode_is_rejected(spark, tmp_path, mode):
+    """A typo must not silently turn the progress metrics off."""
+    with pytest.raises(ValueError, match="'approx' or 'exact'"):
+        write_stream_http(
+            stream_pings(spark, str(tmp_path)),
+            "http://localhost:1/",
+            source_id=5,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            metrics=mode,
+        )
+
+
 def test_approx_metric_is_cumulative_union_across_batches(
     spark, tmp_path, http_server
 ):

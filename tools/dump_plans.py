@@ -6,7 +6,7 @@ Usage:
 Writes OUT_DIR/<query>_<SUFFIX>.txt for each query, using the checkout
 this file lives in (so a worktree at an older commit produces that
 commit's plans — the judging convention for optimization rounds:
-plans/rNN/<query>_before.txt from the round-entry commit and
+plans/<round>/<query>_before.txt from the round-entry commit and
 ..._after.txt from HEAD). Data dir from $SPARK_GRAFT_SF_DIR (default
 sf0.1, the bench scale, so size-gated plan choices match the benched
 shape). Iterative queries execute their internal driver-side probe jobs
